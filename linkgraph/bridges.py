@@ -90,10 +90,11 @@ class _EulerTour:
         self.rounds = rounds
 
 
-def _euler_tour(und: DataFrame, checkpoint_dir: str | None) -> _EulerTour | None:
+def _euler_tour(und: DataFrame, checkpoint_dir: str | None) -> _EulerTour:
     """Build the rooted Euler tour of the spanning forest of the
     canonical simple view ``und`` (must be persisted by the caller).
-    Returns None when the graph has no tree edges."""
+    When the graph has no tree edges the result has ``n_tree == 0``
+    and no tour (``pos`` and ``adj`` are None)."""
     spark = und.sparkSession
 
     # 1. spanning forest + component roots (comp label IS the min node)

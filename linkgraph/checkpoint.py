@@ -46,7 +46,10 @@ def release_state(df: DataFrame | None) -> bool:
     through the LogicalRDD node of the checkpointed plan; this helper
     unpersists it there (falling back to plain unpersist for
     CacheManager-registered frames, and to the ContextCleaner if the
-    internals are unavailable).
+    internals are unavailable). Column projections of such a frame
+    (``state.select(...)``, the usual shape of a returned result) are
+    looked through to the LogicalRDD underneath, so releasing the
+    projection frees the state it reads.
 
     After release the frame is NOT readable (a freed localCheckpoint
     has no lineage to recompute from) — only call on state that
@@ -66,6 +69,8 @@ def release_state(df: DataFrame | None) -> bool:
         # BlockManager layer: the localCheckpoint RDD under a pinned /
         # checkpointed frame (plain unpersist cannot reach it)
         plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+        while plan.getClass().getSimpleName() == "Project":
+            plan = plan.child()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
             freed = True

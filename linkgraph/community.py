@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.checkpoint import attach_caches, pin_table, release_state
-from linkgraph.skew import hub_join, probe_hubs, split_hot
+from linkgraph.skew import HubSplit, pin_split
 from linkgraph.triangles import _undirected_simple
 
 
@@ -306,15 +306,17 @@ FROM per_c CROSS JOIN tot
 
 
 def _local_move_round(
-    sym: DataFrame, deg: DataFrame, state: DataFrame, two_m: int,
+    sym: HubSplit, deg: DataFrame, state: DataFrame, two_m: int,
     parity: int | None = None,
-    hot: tuple[DataFrame, list] | None = None,
 ) -> DataFrame:
     """One synchronized integer-scaled local-move sweep.
 
     sym: (node, nbr, w) both directions, loops EXCLUDED (a loop never
     changes relative gain — e_iC gains it only for i's own membership
-    decisions where it is constant across candidates).
+    decisions where it is constant across candidates), pinned on
+    ``nbr`` by ``pin_split`` — its hub split (linkgraph/skew.py) joins
+    hub-keyed rows against a BROADCAST of the hub state; votes are
+    bit-identical either way.
     deg: (id, d) loop-inclusive weighted degree. state: (id, c).
     parity: when 0/1, ONLY nodes with id % 2 == parity may move this
     round (the rest keep their community verbatim). Alternating the
@@ -322,14 +324,10 @@ def _local_move_round(
     synchronous sweep exhibits on bipartite(-ish) graphs — two
     adjacent nodes can no longer swap into each other's communities in
     the same round — while staying deterministic and SQL-replayable.
-    hot: optional (sym_hot, hub_ids) power-law split — hub-keyed pair
-    rows join a BROADCAST of the hub state map-side over round-robin
-    partitions (linkgraph/skew.py; votes are bit-identical either way).
     """
     nbr_state = state.select(F.col("id").alias("nbr"), F.col("c").alias("cand"))
-    sym_hot, hub_ids = hot if hot is not None else (None, None)
     nbrc = (
-        hub_join(sym, sym_hot, hub_ids, nbr_state, "nbr")
+        sym.join(nbr_state)
         .groupBy(F.col("node").alias("id"), "cand")
         .agg(F.sum("w").cast("long").alias("e"))
     )
@@ -411,17 +409,7 @@ def louvain_local_move(
     raw = und.select(F.col("a").alias("node"), F.col("b").alias("nbr"), "w").unionByName(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"), "w")
     )
-    # und is pinned, so the probe and the filtered pins below re-scan a
-    # materialized table, not the raw edge lineage
-    hub_ids = probe_hubs(raw, "nbr", hub_cap)
-    sym_hot = None
-    if hub_ids:
-        cold, hot_df = split_hot(raw, "nbr", hub_ids)
-        sym = pin_table(cold)
-        sym_hot = pin_table(hot_df)
-    else:
-        sym = pin_table(raw.repartition("nbr").sortWithinPartitions("nbr"))
-    hot = (sym_hot, hub_ids) if sym_hot is not None else None
+    sym = pin_split(raw, "nbr", hub_cap)
     deg = pin_table(_degrees(und, None))
     two_m = 2 * int(und.agg(F.sum("w")).first()[0] or 0)
     if assignment is None:
@@ -441,7 +429,7 @@ def louvain_local_move(
     for r in range(1, rounds + 1):
         parity = (r % 2) if sweep == "alternate" else None
         new_state = pin_table(
-            _local_move_round(sym, deg, state, two_m, parity, hot=hot)
+            _local_move_round(sym, deg, state, two_m, parity)
         )
         changed = (
             new_state.alias("n")
@@ -459,11 +447,9 @@ def louvain_local_move(
         state.select("id", F.col("c").alias("community")), [state]
     )
     stats = {"two_m": two_m, "rounds": ran, "sweep": sweep,
-             "hub_split": len(hub_ids) if hub_ids else 0,
+             "hub_split": sym.n_hubs,
              "compute_s": round(time.time() - t0, 4)}
-    release_state(sym)
-    if sym_hot is not None:
-        release_state(sym_hot)
+    sym.release()
     release_state(und)
     release_state(deg)
     return LouvainResult(
@@ -576,15 +562,7 @@ def louvain(
         raw = und.select(F.col("a").alias("node"), F.col("b").alias("nbr"), "w").unionByName(
             und.select(F.col("b").alias("node"), F.col("a").alias("nbr"), "w")
         )
-        hub_ids = probe_hubs(raw, "nbr", hub_cap)
-        sym_hot = None
-        if hub_ids:
-            cold, hot_df = split_hot(raw, "nbr", hub_ids)
-            sym = pin_table(cold)
-            sym_hot = pin_table(hot_df)
-        else:
-            sym = pin_table(raw.repartition("nbr").sortWithinPartitions("nbr"))
-        hot = (sym_hot, hub_ids) if sym_hot is not None else None
+        sym = pin_split(raw, "nbr", hub_cap)
         init_state = pin_table(deg.select("id", F.col("id").alias("c")))
         state = init_state
         # per-ROUND Q-guard: joint (even parity-gated) moves are only
@@ -599,7 +577,7 @@ def louvain(
             # alternate-parity gating — see _local_move_round: the
             # fully synchronous sweep 2-colors bipartite(-ish) graphs
             new_state = pin_table(
-                _local_move_round(sym, deg, state, two_m, parity=r % 2, hot=hot)
+                _local_move_round(sym, deg, state, two_m, parity=r % 2)
             )
             changed = (
                 new_state.alias("n")
@@ -633,9 +611,7 @@ def louvain(
         state = best_state
         if state is init_state:
             # no round improved the global best — nothing to contract
-            release_state(sym)
-            if sym_hot is not None:
-                release_state(sym_hot)
+            sym.release()
             release_state(deg)
             release_state(init_state)
             break
@@ -651,9 +627,7 @@ def louvain(
         mapping = new_mapping
         best_q = best_q_level
         if n_prev is not None and n_comms >= n_prev:
-            release_state(sym)
-            if sym_hot is not None:
-                release_state(sym_hot)
+            sym.release()
             release_state(deg)
             release_state(state)
             release_state(init_state)
@@ -682,9 +656,7 @@ def louvain(
         new_loops = pin_table(
             new_loop_src.groupBy("id").agg(F.sum("w").cast("long").alias("w"))
         )
-        release_state(sym)
-        if sym_hot is not None:
-            release_state(sym_hot)
+        sym.release()
         release_state(deg)
         release_state(state)
         if init_state is not state:

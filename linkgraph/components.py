@@ -41,7 +41,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.checkpoint import SuperstepLoop, pin_table, release_state
+from linkgraph.checkpoint import SuperstepLoop, release_state
+from linkgraph.skew import pin_split
 
 
 @dataclass
@@ -74,22 +75,10 @@ def connected_components(
       large-star / small-star, Kiveris et al. SoCC'14 — O(log n)
       rounds regardless of diameter; the scale path for long-chain
       graphs). Identical output contract.
-    hub_cap: skew split for power-law graphs (same contract as
-      triangle_count's hub_cap). The symmetrized table concentrates a
-      hub's WHOLE neighborhood in one hash partition of the
-      per-superstep label join, and that straggler task caps the
-      high-parallelism level (measured on the 33M-edge Pareto scaling
-      graph: 2->8-core efficiency ~0.5). With a cap, edges whose src
-      degree exceeds it are split out, ROUND-ROBIN partitioned, and
-      joined per superstep against a BROADCAST of just the hub labels
-      (a hub's label is one row) — map-side, no shuffle, no straggler
-      — while the cold side keeps the pre-partitioned sort-merge join
-      untouched (zero overhead when the cap never triggers).
-      ``"auto"`` probes the degree distribution once and engages only
-      when the top key exceeds both 32x the mean degree and a quarter
-      of an average shuffle partition. Falls back to the plain path
-      when more than 1024 keys qualify (then the graph is not
-      hub-skewed but uniformly dense). Default off.
+    hub_cap: power-law hub split of the per-superstep label join —
+      None (default, off), a numeric src-degree cap, or ``"auto"``;
+      components are identical either way. Thresholds and mechanism:
+      linkgraph/skew.py.
     frontier: True (default) propagates each round only from nodes
       whose label CHANGED last round (delta iteration — exact under
       the monotone min lattice; measured 2.3x/1.9x faster at
@@ -120,61 +109,18 @@ def connected_components(
         e = e.filter(F.coalesce(F.col("weight"), F.lit(1.0)) >= F.lit(threshold))
     e = e.select("src", "dst")
     # symmetrize; no distinct — MIN is idempotent under duplicates.
-    # partition AND sort by src once: the per-iteration sort-merge join
-    # reuses the cached layout (no re-shuffle/re-sort of the big side)
+    # pin_split partitions AND sorts by src once: the per-iteration
+    # sort-merge join reuses the pinned layout (no re-shuffle/re-sort
+    # of the big side)
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
-    hub_ids: list[int] | None = None
-    sym_cached = None
-    if hub_cap is not None:
-        # one scan of the symmetrized table for the degree probe AND
-        # the filtered pins below (otherwise the lineage re-derives 3x)
-        sym_cached = sym.persist()
-        sym = sym_cached
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        deg = sym.groupBy("src").agg(F.count("*").alias("c")).persist()
-        if hub_cap == "auto":
-            agg = deg.agg(
-                F.sum("c").alias("m"), F.count("*").alias("n"), F.max("c").alias("mx")
-            ).first()
-            m_sym, n_keys, mx = agg["m"] or 0, agg["n"] or 1, agg["mx"] or 0
-            cap = max(32.0 * m_sym / n_keys, m_sym / n_part / 4.0)
-            hub_cap = cap if mx > cap else None
-        if hub_cap is not None:
-            # size-gated driver collect: hub sets beyond 1024 keys mean
-            # uniform density, where the split would broadcast too much
-            rows = deg.filter(F.col("c") > hub_cap).select("src").limit(1025).collect()
-            if 0 < len(rows) <= 1024:
-                hub_ids = [r["src"] for r in rows]
-        deg.unpersist()
-
-    if hub_ids:
-        # cold side: the usual pre-partitioned pre-sorted layout.
-        # hot side: ROUND-ROBIN partitions (no key grouping — the whole
-        # point is spreading one key's rows across every task slot).
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        sym_hot = pin_table(
-            sym.filter(F.col("src").isin(hub_ids)).repartition(n_part)
-        )
-        sym = pin_table(
-            sym.filter(~F.col("src").isin(hub_ids))
-            .repartition("src").sortWithinPartitions("src")
-        )
-    else:
-        sym_hot = None
-        sym = pin_table(sym.repartition("src").sortWithinPartitions("src"))
-    sym.count()
-    if sym_cached is not None:
-        sym_cached.unpersist()
+    split = pin_split(sym, "src", hub_cap)
     if nodes is not None:
         base = nodes.select("id")
     else:
         # universe from the PINNED tables (src alone covers both
         # endpoints) — never a second pass over the raw lineage
-        base = sym.select(F.col("src").alias("id"))
-        if sym_hot is not None:
-            base = base.union(sym_hot.select(F.col("src").alias("id")))
-        base = base.distinct()
+        base = split.rows().select(F.col("src").alias("id")).distinct()
     base = base.persist()
     n_nodes = base.count()
     t_load = time.time() - t0
@@ -214,23 +160,10 @@ def connected_components(
     t1 = time.time()
     it = start_iter
     for it in range(start_iter + 1, max_iter + 1):
-        if frontier:
-            front = labels.filter("changed").select("id", "comp")
-        else:
-            front = labels.select("id", "comp")
-        prop = (
-            sym.join(front, sym.src == front.id)
-            .select(sym.dst.alias("id"), "comp")
+        front = labels.filter("changed") if frontier else labels
+        prop = split.join(front.select(F.col("id").alias("src"), "comp")).select(
+            F.col("dst").alias("id"), "comp"
         )
-        if sym_hot is not None:
-            # hub labels are <= |hub_ids| rows — broadcast them and
-            # close the hub neighborhoods map-side over the round-robin
-            # partitions (no shuffle, no straggler)
-            hub_lab = front.filter(F.col("id").isin(hub_ids))
-            prop_hot = sym_hot.join(
-                F.broadcast(hub_lab), sym_hot.src == hub_lab.id
-            ).select(sym_hot.dst.alias("id"), "comp")
-            prop = prop.union(prop_hot)
         cand = prop.groupBy("id").agg(F.min("comp").alias("cand"))
         new_labels = (
             labels.select("id", "comp")
@@ -256,14 +189,12 @@ def connected_components(
         "setCount": set_count,
         "iterations": it,
         "threshold": threshold,
-        "hub_split": len(hub_ids) if hub_ids else 0,
+        "hub_split": split.n_hubs,
         "load_s": round(t_load, 4),
         "compute_s": round(time.time() - t1, 4),
     }
     base.unpersist()
-    if sym_hot is not None:
-        release_state(sym_hot)
-    release_state(sym)
+    split.release()
     # public contract stays (id, comp): the frontier flag is loop state
     return ComponentsResult(
         components=labels.select("id", "comp"),

@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 from linkgraph.checkpoint import attach_caches, pin_table, release_state
 from linkgraph.community import _degrees, _und_long
 from linkgraph.pipeline.hashing import stable_hash64, stable_hash64_sql
-from linkgraph.skew import hub_join, probe_hubs, split_hot
+from linkgraph.skew import HubSplit, pin_split
 
 _SWEEPS = {"sync": 1, "alternate": 2, "hash": 4}  # -> early-stop streak
 
@@ -126,8 +126,7 @@ def _delta_expr(two_m: int | str) -> str:
 
 
 def _module_tables(
-    sym: DataFrame, deg: DataFrame, state: DataFrame,
-    hot: tuple[DataFrame, list] | None = None,
+    sym: HubSplit, deg: DataFrame, state: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(sd per module, cut per module, 1-row Q total) — all integers.
     ``cut`` is left-joined from the module list so a module whose
@@ -137,7 +136,7 @@ def _module_tables(
     The cut is computed through the per-node neighbor-module mass
     (node, cn, e) and a small join on ``id`` — NOT a second per-edge
     join with the node-side state: the nbr-side probe is the only
-    edge-sized join, so the optional ``hot`` split (linkgraph/skew.py)
+    edge-sized join, so the hub split of ``sym`` (linkgraph/skew.py)
     covers ALL the per-edge skew here, and the follow-up join fans at
     most #modules-per-node rows per node. Identical integer algebra
     either way (sum of w over cross-module edges grouped by the
@@ -147,10 +146,9 @@ def _module_tables(
         .groupBy(F.col("c").alias("m"))
         .agg(F.sum("d").cast("long").alias("sd"))
     )
-    sym_hot, hub_ids = hot if hot is not None else (None, None)
     nbr_state = state.select(F.col("id").alias("nbr"), F.col("c").alias("cn"))
     nbrm = (
-        hub_join(sym, sym_hot, hub_ids, nbr_state, "nbr")
+        sym.join(nbr_state)
         .groupBy(F.col("node").alias("id"), "cn")
         .agg(F.sum("w").cast("long").alias("e"))
     )
@@ -198,26 +196,24 @@ def _movable_sql(round_no: int, sweep: str, id_expr: str) -> str:
 
 
 def _infomap_round(
-    sym: DataFrame,
+    sym: HubSplit,
     deg: DataFrame,
     degx: DataFrame,
     state: DataFrame,
     two_m: int,
     movable=None,
-    hot: tuple[DataFrame, list] | None = None,
 ) -> DataFrame:
     """One synchronized map-equation sweep (see module docstring).
     Mirrors ``community._local_move_round``'s candidate machinery;
     only the score differs. ``deg``: (id, d) full weighted degree,
-    ``degx``: (id, dx) external (loop-free) degree.
-    hot: optional (sym_hot, hub_ids) power-law split applied to BOTH
-    per-edge probes of the round — the module cut census and the
-    candidate vote (linkgraph/skew.py; bit-identical either way)."""
-    sd, cut, q = _module_tables(sym, deg, state, hot=hot)
+    ``degx``: (id, dx) external (loop-free) degree. ``sym``'s hub
+    split serves BOTH per-edge probes of the round — the module cut
+    census and the candidate vote (linkgraph/skew.py; bit-identical
+    either way)."""
+    sd, cut, q = _module_tables(sym, deg, state)
     nbr_state = state.select(F.col("id").alias("nbr"), F.col("c").alias("cand"))
-    sym_hot, hub_ids = hot if hot is not None else (None, None)
     nbrc = (
-        hub_join(sym, sym_hot, hub_ids, nbr_state, "nbr")
+        sym.join(nbr_state)
         .groupBy(F.col("node").alias("id"), "cand")
         .agg(F.sum("w").cast("long").alias("e"))
     )
@@ -291,16 +287,14 @@ def infomap_local_move(
         raise ValueError(f"bad sweep {sweep}")
     t0 = time.time()
     und = pin_table(_und_long(edges))
-    state, ran, two_m, sym, deg, hot = _run_sweep(
+    state, ran, two_m, sym, deg = _run_sweep(
         und, None, rounds, sweep, assignment, hub_cap=hub_cap
     )
-    codelength = _codelength(sym, deg, state, two_m, hot=hot)
+    codelength = _codelength(sym, deg, state, two_m)
     n_modules = state.select("c").distinct().count()
     # the inputs are consumed; only the final state backs the (lazy)
     # assignment — same hygiene as louvain_local_move
-    release_state(sym)
-    if hot is not None:
-        release_state(hot[0])
+    sym.release()
     release_state(und)
     release_state(deg)
     result = attach_caches(state.select("id", F.col("c").alias("module")), [state])
@@ -311,7 +305,7 @@ def infomap_local_move(
         stats={
             "two_m": two_m,
             "n_modules": n_modules,
-            "hub_split": len(hot[1]) if hot is not None else 0,
+            "hub_split": sym.n_hubs,
             "wall_sec": time.time() - t0,
         },
         _caches=[state],
@@ -328,24 +322,14 @@ def _run_sweep(
 ):
     """Sweep to (early-stopped) fixpoint over a pinned (a,b,w) simple
     view + optional (id,w) loops. Returns (state pinned, rounds_run,
-    two_m, sym pinned, deg pinned, hot) — caller releases
-    sym/deg/state and, when ``hot`` is not None, its pinned hot table.
+    two_m, sym, deg pinned) — ``sym`` is the ``pin_split`` HubSplit
+    of the symmetric pairs; caller releases sym/deg/state.
     hub_cap: power-law skew split for the per-round per-edge probes
-    (linkgraph/skew.py, same contract as label_propagation). When
-    engaged, the returned ``sym`` is the COLD half — pass ``hot``
-    along to any census that must see every edge (_codelength)."""
+    (linkgraph/skew.py, same contract as label_propagation)."""
     raw = und.select(F.col("a").alias("node"), F.col("b").alias("nbr"), "w").unionByName(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"), "w")
     )
-    hub_ids = probe_hubs(raw, "nbr", hub_cap)
-    sym_hot = None
-    if hub_ids:
-        cold, hot_df = split_hot(raw, "nbr", hub_ids)
-        sym = pin_table(cold)
-        sym_hot = pin_table(hot_df)
-    else:
-        sym = pin_table(raw.repartition("nbr").sortWithinPartitions("nbr"))
-    hot = (sym_hot, hub_ids) if sym_hot is not None else None
+    sym = pin_split(raw, "nbr", hub_cap)
     deg = pin_table(_degrees(und, loops))
     two_m = 2 * int(und.agg(F.sum("w")).first()[0] or 0)
     if loops is not None:
@@ -375,7 +359,7 @@ def _run_sweep(
     zero_streak = 0
     for r in range(1, rounds + 1):
         new_state = pin_table(
-            _infomap_round(sym, deg, degx, state, two_m, _movable(r, sweep), hot=hot)
+            _infomap_round(sym, deg, degx, state, two_m, _movable(r, sweep))
         )
         n_moved = (
             new_state.alias("new")
@@ -394,7 +378,7 @@ def _run_sweep(
             zero_streak = 0
     if loops is not None:
         release_state(degx)
-    return state, ran, two_m, sym, deg, hot
+    return state, ran, two_m, sym, deg
 
 
 def infomap(
@@ -438,12 +422,13 @@ def infomap(
     t0 = time.time()
     spark = edges.sparkSession
     und0 = pin_table(_und_long(edges))
-    sym0 = pin_table(
+    # unsplit: the original-graph census runs once per level
+    sym0 = HubSplit(pin_table(
         und0.select(F.col("a").alias("node"), F.col("b").alias("nbr"), "w")
         .unionByName(
             und0.select(F.col("b").alias("node"), F.col("a").alias("nbr"), "w")
         )
-    )
+    ), "nbr")
     deg0 = pin_table(_degrees(und0, None))
     two_m0 = 2 * int(und0.agg(F.sum("w")).first()[0] or 0)
     fp = (
@@ -528,7 +513,7 @@ def infomap(
             )
             release_state(ck0)  # durable parquet is the record we keep
     for lv in range(start + 1, max_levels + 1):
-        state, ran, _, sym, deg, hot = _run_sweep(
+        state, ran, _, sym, deg = _run_sweep(
             und, loops, rounds_per_level, sweep, hub_cap=hub_cap
         )
         rounds_run += ran
@@ -540,9 +525,7 @@ def infomap(
         l_ref = _codelength(sym0, deg0, refined, two_m0)
         n_modules = state.select("c").distinct().count()
         n_nodes = state.count()
-        release_state(sym)
-        if hot is not None:
-            release_state(hot[0])
+        sym.release()
         release_state(deg)
         if l_ref >= best_l - 1e-12:
             release_state(refined)
@@ -605,7 +588,7 @@ def infomap(
         release_state(loops)
     n_final = mapping.select("c").distinct().count()
     loop.close()
-    release_state(sym0)
+    sym0.release()
     release_state(und0)
     release_state(deg0)
     result = attach_caches(
@@ -626,18 +609,15 @@ def infomap(
 
 
 def _codelength(
-    sym: DataFrame, deg: DataFrame, state: DataFrame, two_m: int,
-    hot: tuple[DataFrame, list] | None = None,
+    sym: HubSplit, deg: DataFrame, state: DataFrame, two_m: int,
 ) -> float:
     """Full two-level L (nats) including the constant Σ plp(d) term.
     Reported for monotonicity tests — NOT oracle-compared (the Σ over
     modules is an order-free sum of doubles only up to fp-association;
-    the per-move deltas the oracle replays are fixed trees instead).
-    ``hot``: when ``sym`` is the COLD half of a skew split, the
-    matching (sym_hot, hub_ids) pair — the census must see every edge."""
+    the per-move deltas the oracle replays are fixed trees instead)."""
     if two_m == 0:
         return 0.0
-    sd, cut, q = _module_tables(sym, deg, state, hot=hot)
+    sd, cut, q = _module_tables(sym, deg, state)
     mod = sd.join(cut, "m").selectExpr(
         f"SUM(-2 * {_plp('cut', two_m)} + {_plp('(cut + sd)', two_m)}) AS s"
     )
@@ -664,7 +644,7 @@ def map_equation(edges: DataFrame, assignment: DataFrame) -> float:
     state = deg.select("id").join(
         assignment.select("id", F.col("module").cast("long").alias("c")), "id", "left"
     ).select("id", F.coalesce("c", F.col("id")).alias("c"))
-    return _codelength(sym, deg, state, two_m)
+    return _codelength(HubSplit(sym, "nbr"), deg, state, two_m)
 
 
 def infomap_sql(edges_sql: str, rounds: int, sweep: str = "sync") -> str:

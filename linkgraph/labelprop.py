@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.checkpoint import SuperstepLoop, pin_table, release_state
+from linkgraph.skew import pin_split
 
 
 @dataclass
@@ -73,20 +74,10 @@ def label_propagation(
     nodes: optional DataFrame(id[, <seed_col>][, <node_weight_col>]).
       Seed labels come from ``seed_col`` when present (null = unseeded
       -> own id), matching the reference's partitionProperty default.
-    hub_cap: skew split for power-law graphs (same contract/thresholds
-      as ``connected_components(hub_cap=...)``). The per-round vote
-      join probes ``pairs`` (hash-partitioned on ``nbr``) with the
-      current labels; a power-law hub's entire neighborhood lives in
-      ONE partition of that probe, and the straggler task caps the
-      high-parallelism level. With a cap, pair rows whose nbr degree
-      exceeds it are split out, ROUND-ROBIN partitioned, and joined
-      per superstep against a BROADCAST of just the hub labels (a
-      hub's (label, nw) is one row) — map-side, no shuffle, no
-      straggler — while the cold side keeps the pre-partitioned
-      sort-merge join untouched. ``"auto"`` probes the degree
-      distribution once and engages only for genuinely hub-skewed
-      graphs (top key > 32x mean AND > a quarter of an average
-      shuffle partition; <= 1024 qualifying keys). Default off.
+    hub_cap: power-law hub split of the per-superstep vote join —
+      None (default, off), a numeric nbr-degree cap, or ``"auto"``;
+      labels are identical either way. Thresholds and mechanism:
+      linkgraph/skew.py.
     resume: with a ``checkpoint_dir``, continue from the last durable
       superstep in the manifest instead of restarting (same contract
       as ``pagerank(resume=True)``).
@@ -95,64 +86,18 @@ def label_propagation(
     t0 = time.time()
     raw_pairs = _neighbor_pairs(edges, direction)
 
-    hub_ids: list[int] | None = None
-    raw_cached = None
-    if hub_cap is not None:
-        # one scan of the pair derivation for the degree probe AND the
-        # two filtered pins below (otherwise the lineage re-derives
-        # 3x: deg agg + hot pin + cold pin)
-        raw_cached = raw_pairs.persist()
-        raw_pairs = raw_cached
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        deg = raw_pairs.groupBy("nbr").agg(F.count("*").alias("c")).persist()
-        if hub_cap == "auto":
-            agg = deg.agg(
-                F.sum("c").alias("m"), F.count("*").alias("n"), F.max("c").alias("mx")
-            ).first()
-            m_pairs, n_keys, mx = agg["m"] or 0, agg["n"] or 1, agg["mx"] or 0
-            cap = max(32.0 * m_pairs / n_keys, m_pairs / n_part / 4.0)
-            hub_cap = cap if mx > cap else None
-        if hub_cap is not None:
-            # size-gated driver collect: >1024 qualifying keys means
-            # uniform density, where the split would broadcast too much
-            rows = deg.filter(F.col("c") > hub_cap).select("nbr").limit(1025).collect()
-            if 0 < len(rows) <= 1024:
-                hub_ids = [r["nbr"] for r in rows]
-        deg.unpersist()
-
     # partitioned+sorted by join key once; iterations reuse the layout
-    # pin_table: constant per-superstep plan (see linkgraph/checkpoint.py)
-    if hub_ids:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        # hot side: ROUND-ROBIN partitions (no key grouping — the whole
-        # point is spreading one nbr key's rows across every task slot)
-        pairs_hot = pin_table(
-            raw_pairs.filter(F.col("nbr").isin(hub_ids)).repartition(n_part)
-        )
-        pairs = pin_table(
-            raw_pairs.filter(~F.col("nbr").isin(hub_ids))
-            .repartition("nbr").sortWithinPartitions("nbr")
-        )
-    else:
-        pairs_hot = None
-        pairs = pin_table(raw_pairs.repartition("nbr").sortWithinPartitions("nbr"))
-    pairs.count()
-    if raw_cached is not None:
-        raw_cached.unpersist()
+    split = pin_split(raw_pairs, "nbr", hub_cap)
     if nodes is not None:
         base = nodes
     else:
         # universe from the PINNED pairs table(s) — every edge
         # contributes both endpoints across (node, nbr) in every
         # direction mode, so this never re-scans the raw edge lineage
+        pairs = split.rows()
         base = pairs.select(F.col("node").alias("id")).union(
             pairs.select(F.col("nbr").alias("id"))
-        )
-        if pairs_hot is not None:
-            base = base.union(pairs_hot.select(F.col("node").alias("id"))).union(
-                pairs_hot.select(F.col("nbr").alias("id"))
-            )
-        base = base.distinct()
+        ).distinct()
     seed = (
         F.coalesce(F.col(seed_col).cast("long"), F.col("id"))
         if seed_col in base.columns
@@ -191,16 +136,7 @@ def label_propagation(
         nbr_state = labels.join(init.select("id", "nw"), "id").select(
             F.col("id").alias("nbr"), F.col("label").alias("nbr_label"), "nw"
         )
-        voted = pairs.join(nbr_state, "nbr").select("node", "nbr_label", "w", "nw")
-        if pairs_hot is not None:
-            # hub (label, nw) rows are <= |hub_ids| — broadcast them and
-            # close the hub neighborhoods map-side over the round-robin
-            # partitions (no shuffle, no straggler)
-            hub_state = nbr_state.filter(F.col("nbr").isin(hub_ids))
-            voted = voted.union(
-                pairs_hot.join(F.broadcast(hub_state), "nbr")
-                .select("node", "nbr_label", "w", "nw")
-            )
+        voted = split.join(nbr_state).select("node", "nbr_label", "w", "nw")
         votes = (
             voted.groupBy("node", F.col("nbr_label").alias("label"))
             .agg(F.sum(F.col("w") * F.col("nw")).alias("v"))
@@ -237,13 +173,11 @@ def label_propagation(
         "ran_iterations": it,
         "did_converge": converged,
         "direction": direction.upper(),
-        "hub_split": len(hub_ids) if hub_ids else 0,
+        "hub_split": split.n_hubs,
         "load_s": round(t_load, 4),
         "compute_s": round(time.time() - t1, 4),
     }
-    release_state(pairs)
-    if pairs_hot is not None:
-        release_state(pairs_hot)
+    split.release()
     release_state(init)
     return LabelPropagationResult(labels=labels, iterations=it, converged=converged, stats=stats)
 

@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from linkgraph.checkpoint import pin_table, release_state
 from linkgraph.coloring import _sym
 from linkgraph.pipeline.hashing import stable_hash64, stable_hash64_sql
-from linkgraph.skew import hub_join, probe_hubs, split_hot
+from linkgraph.skew import HubSplit, pin_split
 from linkgraph.triangles import _undirected_simple
 
 
@@ -124,39 +124,23 @@ def balanced_partition(
         )
     t0 = time.time()
     spark = edges.sparkSession
-    raw = _wsym(edges, weighted).persist()
-    # fingerprint over the FULL symmetric table — must be independent
-    # of whether/where the hub split lands (results are identical)
-    fp_full = (
-        int(raw.agg(F.expr("bit_xor(xxhash64(node, nbr, w6))").alias("fp"))
+    sym = pin_split(_wsym(edges, weighted), "node", hub_cap)
+    sym_rows = sym.rows()
+    # fingerprint over ALL the symmetric rows — XOR is order-free, so
+    # it is independent of whether/where the hub split lands
+    fp = (
+        int(sym_rows.agg(F.expr("bit_xor(xxhash64(node, nbr, w6))").alias("fp"))
             .first()["fp"] or 0)
         if checkpoint_dir else None
     )
-    hub_ids = probe_hubs(raw, "node", hub_cap)
-    sym_hot = None
-    if hub_ids:
-        cold, hot_df = split_hot(raw, "node", hub_ids)
-        sym = pin_table(cold)
-        sym_hot = pin_table(hot_df)
-    else:
-        sym = pin_table(raw.repartition("node"))
-    raw.unpersist()
-    hot = (sym_hot, hub_ids) if sym_hot is not None else None
-    nodes = sym.select(F.col("node").alias("id")).distinct()
-    if sym_hot is not None:
-        nodes = nodes.unionByName(
-            sym_hot.select(F.col("node").alias("id"))
-        ).distinct()
-    fp = fp_full
+    nodes = sym_rows.select(F.col("node").alias("id")).distinct()
     params = {"k": k, "slack_pct": slack_pct, "seed": seed,
               "weighted": weighted}
     loop = SuperstepLoop(
         spark, checkpoint_dir, every=checkpoint_every, name="bpart",
         max_steps=rounds, context={"graph_fp": fp, "params": params},
     )
-    caches = [sym]
-    if sym_hot is not None:
-        caches.append(sym_hot)
+    caches = [sym.cold, sym.hot]
     start = 0
     state = None
     movers_hist: list[int] = []
@@ -193,7 +177,7 @@ def balanced_partition(
     cap = (n * (100 + slack_pct) + 100 * k - 1) // (100 * k)
     done = rounds
     for t in range(start + 1, rounds + 1):
-        admitted = pin_table(_round_moves(sym, state, cap, hot=hot))
+        admitted = pin_table(_round_moves(sym, state, cap))
         n_moved = admitted.count()
         movers_hist.append(n_moved)
         if n_moved == 0:
@@ -233,7 +217,7 @@ def balanced_partition(
             "loads": loads_final,
             "balance": max(loads_final.values()) / (n / k) if loads_final else 0.0,
             "movers_per_round": movers_hist,
-            "hub_split": len(hub_ids) if hub_ids else 0,
+            "hub_split": sym.n_hubs,
             "wall_s": round(time.time() - t0, 3),
         },
         _caches=caches,
@@ -264,10 +248,7 @@ def _wsym(edges: DataFrame, weighted: bool) -> DataFrame:
     )
 
 
-def _round_moves(
-    sym: DataFrame, state: DataFrame, cap: int,
-    hot: tuple[DataFrame, list] | None = None,
-) -> DataFrame:
+def _round_moves(sym: HubSplit, state: DataFrame, cap: int) -> DataFrame:
     """One round's admitted moves (pre-pin) — the production kernel,
     exposed for plan assertions (tests/test_plans.py).
 
@@ -277,17 +258,15 @@ def _round_moves(
     neighbors" are the same integer sums, and the orientation that
     reuses the pre-partitioned layout wins: the big table contributes
     ZERO exchanges per round instead of a fresh nbr-keyed shuffle
-    (asserted in tests/test_plans.py).
-    hot: optional (sym_hot, hub_ids) power-law split on ``node``
-    (linkgraph/skew.py) — a hub's whole adjacency otherwise sits in
-    one task of the pinned layout; votes are bit-identical either
-    way."""
+    (asserted in tests/test_plans.py). ``sym`` is pinned on ``node``
+    by ``pin_split``; its hub split (linkgraph/skew.py) spreads a
+    hub's whole adjacency, which otherwise sits in one task of the
+    pinned layout — votes are bit-identical either way."""
     loads = state.groupBy("part").agg(F.count("*").alias("load"))
-    sym_hot, hub_ids = hot if hot is not None else (None, None)
     node_state = state.select(F.col("id").alias("node"),
                               F.col("part").alias("npart"))
     nbrp = (
-        hub_join(sym, sym_hot, hub_ids, node_state, "node")
+        sym.join(node_state)
         .groupBy(F.col("nbr").alias("node"), "npart")
         .agg(F.sum("w6").alias("cnt"))
     )

@@ -448,6 +448,7 @@ class ComponentMaintainer:
             )
         res = connected_components(e.withColumn("weight", F.lit(1.0)))
         new = pin_table(res.components)
+        release_state(res.components)  # the loop state under the pin
         if self.assignment is not None:
             if self.retain_history:
                 self._history.append(self.assignment)

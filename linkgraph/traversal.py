@@ -65,13 +65,19 @@ def bfs_stream(
     # visit order over the whole reachable set — distributed_rank
     # (ids.py) keeps the canonical (depth, id) order without a
     # single-task sort of the frontier union
+    from linkgraph.checkpoint import attach_caches
     from linkgraph.ids import distributed_rank
 
     ranked = distributed_rank(
         dist, [("dist", "asc"), ("id", "asc")], name="visit_order"
     )
-    return ranked.select(
-        "visit_order", "id", F.col("dist").cast("long").alias("depth")
+    # the select drops the rank's cache handle — carry it over so
+    # release_caches(result) can free the range-partitioned persist
+    return attach_caches(
+        ranked.select(
+            "visit_order", "id", F.col("dist").cast("long").alias("depth")
+        ),
+        getattr(ranked, "_linkgraph_caches", []),
     )
 
 

@@ -177,6 +177,27 @@ def test_wcc_resume_identical(spark, tmp_path):
     assert max(l["iteration"] for l in lines) > 4
 
 
+def test_release_state_frees_components_result(spark):
+    """``ComponentsResult.components`` is a column projection of the
+    localCheckpointed loop state; release_state must look through the
+    projection and free that state's blocks."""
+    from linkgraph import connected_components
+    from linkgraph.checkpoint import release_state
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (3, 4), (5, 5)], "src long, dst long"
+    )
+    before = persistent_ids()
+    res = connected_components(edges)
+    assert res.set_count == 3
+    assert persistent_ids() - before, "the result state holds storage"
+    assert release_state(res.components)
+    assert persistent_ids() - before == set()
+
+
 def test_lpa_resume_identical(spark, tmp_path):
     """Killed-at-k LPA resumed from the manifest equals the
     uninterrupted fixed-iteration run exactly (deterministic

@@ -224,14 +224,14 @@ def test_balanced_partition_pinned_side_not_reexchanged(spark):
 
     from pyspark.sql import functions as F
 
-    from linkgraph.checkpoint import pin_table, release_state
     from linkgraph.partition import _round_moves, _wsym
+    from linkgraph.skew import pin_split
 
     e = spark.createDataFrame(
         [(i, (i * 7 + 1) % 50) for i in range(200)], "src long, dst long"
     ).filter("src != dst")
-    sym = pin_table(_wsym(e, weighted=False).repartition("node"))
-    state = sym.select(F.col("node").alias("id")).distinct().select(
+    sym = pin_split(_wsym(e, weighted=False), "node", hub_cap=None)
+    state = sym.cold.select(F.col("node").alias("id")).distinct().select(
         "id", (F.col("id") % 3).alias("part")
     )
     plan = (
@@ -243,4 +243,4 @@ def test_balanced_partition_pinned_side_not_reexchanged(spark):
         r"Exchange hashpartitioning\(node#\d+L, \d+\)[^\n]*\n[^\n]*InMemoryTableScan",
         plan,
     ), plan
-    release_state(sym)
+    sym.release()

@@ -629,6 +629,7 @@ def test_balanced_partition_round_shape(spark):
     hash-partitioned groups — never a global range sort of all
     nodes."""
     from linkgraph.partition import _round_moves, _wsym
+    from linkgraph.skew import HubSplit
 
     e = spark.createDataFrame(
         [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0)],
@@ -638,7 +639,7 @@ def test_balanced_partition_round_shape(spark):
     state = sym.select(F.col("node").alias("id")).distinct().select(
         "id", (F.col("id") % 2).alias("part")
     )
-    plan = _plan(_round_moves(sym, state, cap=3))
+    plan = _plan(_round_moves(HubSplit(sym, "node"), state, cap=3))
     assert "CartesianProduct" not in plan
     assert "partial" in plan.lower()
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
@@ -818,13 +819,12 @@ def test_no_unpartitioned_rank_windows_in_rank_operators():
 
 
 def test_community_hub_split_hot_path_is_broadcast(spark):
-    """With a (sym_hot, hub_ids) split supplied, the Louvain round's
-    vote census must close the hub neighborhoods via a BROADCAST join
-    (map-side over the round-robin partitions) — no shuffle of the hot
-    pair rows — while staying free of cartesian products."""
+    """With a hub split engaged, the Louvain round's vote census must
+    close the hub neighborhoods via a BROADCAST join (map-side over
+    the round-robin partitions) — no shuffle of the hot pair rows —
+    while staying free of cartesian products."""
     from linkgraph.community import _local_move_round
-    from linkgraph.partition import _wsym
-    from linkgraph.skew import split_hot
+    from linkgraph.skew import pin_split
 
     e = spark.createDataFrame(
         [(0, i, 1.0) for i in range(1, 30)] + [(1, 2, 1.0), (3, 4, 1.0)],
@@ -837,14 +837,30 @@ def test_community_hub_split_hot_path_is_broadcast(spark):
         e.select(F.col("dst").alias("node"), F.col("src").alias("nbr"),
                  F.lit(1).cast("long").alias("w"))
     )
-    cold, hot = split_hot(raw, "nbr", [0])
+    # forced cap: only the star center (nbr-degree 29) exceeds it
+    sym = pin_split(raw, "nbr", hub_cap=10)
+    assert list(sym.hub_ids) == [0]
     deg = raw.groupBy(F.col("node").alias("id")).agg(
         F.count("*").cast("long").alias("d")
     )
     state = deg.select("id", F.col("id").alias("c"))
-    plan = _plan(
-        _local_move_round(cold, deg, state, two_m=62, hot=(hot, [0]))
-    )
+    plan = _plan(_local_move_round(sym, deg, state, two_m=62))
+    sym.release()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_hub_split_thresholds_live_only_in_skew():
+    """Every per-round pair probe with a ``hub_cap`` goes through
+    ``skew.pin_split``: no module re-derives the hub thresholds, the
+    size-gated hub collect, or the hot/cold row filter."""
+    import importlib
+    import inspect
+
+    for name in ("components", "labelprop", "community", "infomap", "partition"):
+        src = inspect.getsource(importlib.import_module(f"linkgraph.{name}"))
+        assert "pin_split(" in src, name
+        for literal in (".limit(", ".isin(", "1024", "1025", "32.0",
+                        "spark.sql.shuffle.partitions"):
+            assert literal not in src, (name, literal)

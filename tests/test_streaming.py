@@ -315,3 +315,26 @@ def test_incremental_components_batch_equal(spark, tmp_path):
     streaming_components(stream, m2, "inc_wcc_test",
                          str(tmp_path / "ck"))
     assert sorted(map(tuple, m2.assignment.collect())) == want
+
+
+def test_component_maintainer_release_frees_all_state(spark):
+    """Each update pins the new assignment and frees the WCC loop state
+    under it, so after ``release()`` no storage of the maintainer is
+    left."""
+    from linkgraph.streaming import ComponentMaintainer
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    batches = [
+        spark.createDataFrame([(b * 10, b * 10 + 1), (b * 10 + 1, b * 10 + 2)],
+                              "src long, dst long")
+        for b in range(2)
+    ]
+    before = persistent_ids()
+    m = ComponentMaintainer()
+    for batch in batches:
+        m.update(batch)
+    assert m.assignment.count() == 6
+    m.release()
+    assert persistent_ids() - before == set()

@@ -39,6 +39,16 @@ def test_bfs_golden_order(spark, g):
     ]
 
 
+def test_bfs_stream_carries_rank_cache(spark, g):
+    """The visit-order rank persists a range-partitioned frame; the
+    returned stream keeps its handle so the caller can free it."""
+    from linkgraph.checkpoint import release_caches
+
+    out = bfs_stream(g, 1)
+    assert out.count() == 6
+    assert release_caches(out) == 1
+
+
 def test_bfs_max_depth_and_direction(spark, g):
     got = [tuple(r) for r in bfs_stream(g, 1, max_depth=1).collect()]
     assert got == [(1, 1, 0), (2, 2, 1), (3, 3, 1)]
